@@ -131,11 +131,22 @@ def pin_table(df: DataFrame, path: str | None = None) -> DataFrame:
     33M-edge graph (the scaling-bench regime).
 
     So: localCheckpoint (eager) for the constant tiny plan, persist on
-    top for the columnar cache. Physical outputPartitioning and
-    outputOrdering survive both layers, so pre-shuffled pre-sorted
-    join layouts still get reused (asserted in tests/test_plans.py).
+    top for the columnar cache. The physical layout survives both
+    layers ONLY with adaptive execution off: then a pinned
+    ``repartition("src")`` frame reports hashpartitioning(src, n) and a
+    join on src reuses it. With adaptive execution on (the session
+    default, see session.py) the pinned frame reports
+    UnknownPartitioning(0), whatever the input's partitioning — an
+    explicit ``repartition(n, "src")``, a window or a semi join alike —
+    and a small ``repartition("src")`` input is coalesced, down to one
+    partition at benchmark sizes. A join against the pinned side then
+    broadcasts the other side when it is small, and re-shuffles the
+    pinned side when it is not (tests/test_plans.py holds an expected
+    failure for the layout that should survive).
     Costs one extra materialization pass and a second (columnar) copy
-    of the table. Free with ``release_state`` (it drops BOTH layers;
+    of the table; that pass is a no-op write, one job over the cache,
+    where a count() would add a shuffle and two jobs under adaptive
+    execution. Free with ``release_state`` (it drops BOTH layers;
     a no-op for the durable variant, whose files persist until the
     caller removes them). NOTE: a parquet round-trip does NOT preserve
     physical outputPartitioning/outputOrdering — joins against a
@@ -144,7 +155,7 @@ def pin_table(df: DataFrame, path: str | None = None) -> DataFrame:
         df.write.mode("overwrite").parquet(path)
         return df.sparkSession.read.parquet(path)
     pinned = df.localCheckpoint(eager=True).persist()
-    pinned.count()
+    pinned.write.format("noop").mode("overwrite").save()
     return pinned
 
 

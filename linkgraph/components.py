@@ -163,7 +163,6 @@ def connected_components(
     else:
         sym_hot = None
         sym = pin_table(sym.repartition("src").sortWithinPartitions("src"))
-    sym.count()
     if sym_cached is not None:
         sym_cached.unpersist()
     if nodes is not None:

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -120,8 +120,10 @@ def write_results(
 
     Returns {path, format, mode, rows, files, bytes, write_millis} —
     the engine analog of the reference's YIELD writeMillis/nodes row.
-    Row count comes from the written parquet footers (metadata-only
-    second job, no recompute of the result plan).
+    ``rows`` is the number of rows THIS call wrote (under
+    ``mode='append'`` not the rows already at ``path``), counted by an
+    Observation on the written frame as the write job runs: no second
+    job, no re-read of the files.
 
     ``format='iceberg'`` routes through the DataSource-V2 writer when
     the Iceberg runtime is present (probed), with a clear error here
@@ -135,6 +137,11 @@ def write_results(
         )
     t0 = time.time()
     spark = df.sparkSession
+    if format != "iceberg":
+        # counted as the write job runs (the Iceberg branch reads its
+        # commit summary instead)
+        written = Observation()
+        df = df.observe(written, F.count(F.lit(1)).alias("rows"))
     writer = df.write.mode(mode).format(format)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -161,7 +168,7 @@ def write_results(
     writer.save(path)
     write_millis = int((time.time() - t0) * 1000)
 
-    rows = spark.read.format(format).load(path).count()
+    rows = written.get["rows"]
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
     fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
     summary = fs.getContentSummary(jvm_path)

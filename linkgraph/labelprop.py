@@ -136,7 +136,6 @@ def label_propagation(
     else:
         pairs_hot = None
         pairs = pin_table(raw_pairs.repartition("nbr").sortWithinPartitions("nbr"))
-    pairs.count()
     if raw_cached is not None:
         raw_cached.unpersist()
     if nodes is not None:

@@ -27,11 +27,15 @@ aggregation inside SUM — free via Catalyst (SURVEY.md §4). Its
 degree-balanced ComputeStep partitioning maps to AQE skew handling
 plus the CSR/salting fast path in linkgraph/csr.py.
 
-Scale notes (100TB design): ``edges_pre`` is hash-partitioned by src
-ONCE and persisted, so the per-iteration join only shuffles the
-(small-side) ranks state; the groupBy(dst) partial-aggregates map-side
-so hot in-degree hubs ship one partial row per shuffle partition, not
-one row per in-edge.
+Scale notes (100TB design): the loop's edge table is shuffled by src
+and sorted ONCE at load and pinned (checkpoint.pin_table). With
+adaptive execution off that layout survives the pin, so the
+per-iteration join only shuffles the (small-side) ranks state. With it
+on (the session default) the pinned table reports no partitioning: the
+join broadcasts the ranks state while it is small, and re-shuffles the
+edges every superstep once it is not. The groupBy(dst) partial-
+aggregates map-side, so hot in-degree hubs ship one partial row per
+shuffle partition, not one row per in-edge.
 """
 
 from __future__ import annotations
@@ -39,10 +43,13 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from linkgraph.checkpoint import SuperstepLoop
+
+# static_folding=None turns the static-node split on from this many edges
+STATIC_SPLIT_MIN_EDGES = 2_000_000
 
 
 @dataclass
@@ -52,6 +59,20 @@ class PageRankResult:
     converged: bool
     delta: float | None
     stats: dict = field(default_factory=dict)
+    _caches: list = field(default_factory=list, repr=False)
+
+    def release(self) -> None:
+        """Free the caches the lazy ``scores`` still reads: the final
+        superstep state and, with the static split, the node table its
+        static rows come from. Call once the scores are consumed (read
+        or written): afterwards ``scores`` is no longer readable, since
+        a non-durable final state is a local checkpoint with no lineage
+        to recompute from."""
+        from linkgraph.checkpoint import release_state
+
+        for c in self._caches:
+            release_state(c)
+        self._caches = []
 
 
 def _node_universe(edges: DataFrame, nodes: DataFrame | None) -> DataFrame:
@@ -61,6 +82,33 @@ def _node_universe(edges: DataFrame, nodes: DataFrame | None) -> DataFrame:
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))
         .distinct()
+    )
+
+
+def _node_table(
+    edges_pre: DataFrame, nodes: DataFrame | None, seen: Observation | None = None
+) -> DataFrame:
+    """(id, indeg) over the node universe: the caller's ``nodes``
+    left-joined to the per-target in-degrees, else every src and dst
+    from ONE aggregate over both endpoint columns. ``seen`` receives
+    the max in-degree over EVERY target, inside the universe or not."""
+    if nodes is None:
+        in_deg = (
+            edges_pre.select(F.col("src").alias("id"), F.lit(0).alias("_in"))
+            .union(edges_pre.select(F.col("dst").alias("id"), F.lit(1).alias("_in")))
+            .groupBy("id")
+            .agg(F.sum("_in").alias("indeg"))
+        )
+    else:
+        in_deg = edges_pre.groupBy(F.col("dst").alias("id")).agg(
+            F.count("*").alias("indeg")
+        )
+    if seen is not None:
+        in_deg = in_deg.observe(seen, F.max("indeg").alias("mx"))
+    if nodes is None:
+        return in_deg
+    return nodes.select("id").join(in_deg, "id", "left").select(
+        "id", F.coalesce(F.col("indeg"), F.lit(0)).alias("indeg")
     )
 
 
@@ -99,11 +147,12 @@ def pagerank(
       explicit salting additionally spreads a mega-hub's partial rows
       over `salt` reducers, which matters once map-partition counts
       reach the tens of thousands (1000-executor regime).
-      ``"auto"`` measures the in-degree distribution at load (one
-      aggregate over the cached edge table — the degree_histogram skew
-      probe inlined) and engages a 16-way salt when the max in-degree
-      exceeds 32x the mean: the decision the operator docs tell users
-      to make by hand, made from the data.
+      ``"auto"`` measures the in-degree distribution at load (observed
+      on the pass that pins the loop's tables — the degree_histogram
+      skew probe inlined, no action of its own) and engages a 16-way
+      salt when the max in-degree of the iterated edges exceeds 32x
+      the mean over all nodes: the decision the operator docs tell
+      users to make by hand, made from the data.
     source_nodes: personalized PageRank (the later-lineage
       `sourceNodes` option of the reference procedure family): the
       teleport term lands ONLY on the given nodes — tp_i = 1-d for
@@ -134,6 +183,10 @@ def pagerank(
     in-degree>0 node set against the dynamic-source edge subset —
     on power-law graphs this cuts per-iteration join/shuffle volume
     substantially while computing the exact same fixed-point.
+
+    ``PageRankResult.release()`` frees what the lazy scores still read
+    once they are consumed; a loop of calls that skips it keeps one
+    final state (and, with the split, one node table) cached per call.
     """
     spark = edges.sparkSession
     t0 = time.time()
@@ -193,89 +246,97 @@ def pagerank(
         .select("src", "dst", (F.col("w") / F.sum("w").over(win)).alias("share"))
     )
 
-    # persist BEFORE counting: the caller's edge table may hide an
-    # expensive upstream (Arrow-UDF derivation); the count materializes
-    # it once and every later pass (node universe, split decision,
-    # edges_dyn layout) reads the cache instead of recomputing lineage
-    edges_pre = edges_pre.persist()
-    n_edges = edges_pre.count()
-
-    # node universe AFTER the edge cache exists: derive it from
-    # edges_pre (same src/dst set) so no second pass over the raw edge
-    # lineage is ever taken; an explicit `nodes` frame is the caller's
-    # (cheap or already-cached) dimension
-    base = _node_universe(edges_pre, nodes).persist()
-    n_nodes = base.count()
-
-    # The static-node split costs ~6 extra jobs at load; it pays for
-    # itself through smaller per-superstep joins only on large graphs.
-    split_static = (
-        static_folding if static_folding is not None else n_edges >= 2_000_000
-    )
-    if split_static:
-        # split node universe: dynamic = in-degree > 0 (rank can
-        # change), static = in-degree 0 (rank pinned at 1-d forever)
-        targets = edges_pre.select(F.col("dst").alias("id")).distinct().persist()
-        dyn_base = base.join(targets, "id", "left_semi").persist()
-        static_nodes = base.join(targets, "id", "left_anti").persist()
-        edges_src_filtered = edges_pre.join(
-            dyn_base.select(F.col("id").alias("src")), "src", "left_semi"
-        )
-        # constant baseline: contributions of static sources, folded
-        # once — a static source's rank is pinned at its teleport value
-        # (1-d classic, tp personalized), so it contributes tp * share
-        static_src_edges = edges_pre.join(
-            dyn_base.select(F.col("id").alias("src")), "src", "left_anti"
-        )
-        if srcs is None:
-            s0 = static_src_edges.groupBy("dst").agg(
-                (F.lit(1.0 - d) * F.sum("share")).alias("s0")
-            )
-        else:
-            s0 = (
-                static_src_edges.join(
-                    _with_tp(base).select(F.col("id").alias("src"), "tp"), "src"
-                )
-                .groupBy("dst")
-                .agg(F.sum(F.col("tp") * F.col("share")).alias("s0"))
-            )
-        dyn = (
-            _with_tp(dyn_base.join(s0, dyn_base.id == s0.dst, "left")
-                     .select("id", F.coalesce(F.col("s0"), F.lit(0.0)).alias("s0")))
-            .repartition("id")
-        )
-    else:
-        targets = None
-        dyn_base = base
-        static_nodes = None
-        edges_src_filtered = edges_pre
-        dyn = _with_tp(base.select("id", F.lit(0.0).alias("s0"))).repartition("id")
-
-    # dynamic-source edges, pre-partitioned AND pre-sorted by src so
-    # the per-iteration sort-merge join reuses the cached layout (the
-    # big side is never re-sorted or re-shuffled inside the loop).
-    # pin_table (checkpoint + columnar persist, see checkpoint.py):
-    # truncates the plan so a fat upstream derivation is analyzed once
-    # instead of every superstep, while keeping the per-superstep scan
-    # on the compressed-columnar cache.
+    # Every load figure is OBSERVED on the passes that pin the two
+    # loop-invariant tables (Observation metrics ride on the pinning
+    # action), so the load runs no count or probe action of its own.
     from linkgraph.checkpoint import pin_table, release_state
 
-    edges_dyn = pin_table(
-        edges_src_filtered.repartition("src").sortWithinPartitions("src")
-    )
-    n_dyn_edges = edges_dyn.count()
-    dyn = pin_table(dyn)
-    edges_pre.unpersist()
+    seen_nodes, seen_dst = Observation(), Observation()
+    split_static = static_folding
+    if not split_static:
+        # unsplit (or not yet decided): the share table IS the loop's
+        # edge table, pre-partitioned AND pre-sorted by src; pinning it
+        # (checkpoint + columnar persist, see checkpoint.py) truncates
+        # the plan so a fat upstream derivation is analyzed once, not
+        # every superstep, and the pinning pass counts it
+        seen_edges = Observation()
+        edges_dyn = pin_table(
+            edges_pre.observe(seen_edges, F.count(F.lit(1)).alias("e"))
+            .repartition("src").sortWithinPartitions("src")
+        )
+        n_edges = seen_edges.get["e"]
+        # the split costs a flag join at load; it pays for itself
+        # through smaller per-superstep joins only on large graphs
+        if split_static is None:
+            split_static = n_edges >= STATIC_SPLIT_MIN_EDGES
+        edges_pre = edges_dyn
+    else:
+        # the caller's edge table may hide an expensive upstream
+        # (Arrow-UDF derivation): the share table is cached once and
+        # every load pass reads the cache instead of the lineage
+        edges_pre = edges_pre.persist()
+
+    # ONE node table (id, indeg, tp) aggregated from the share table:
+    # the caller's `nodes` left-joined to the in-degrees when given,
+    # else every src and dst. The static split is a predicate on it
+    # (indeg == 0), not a re-join against the node universe.
+    node_t = _with_tp(_node_table(edges_pre, nodes, None if split_static else seen_dst))
+    if split_static:
+        node_t = node_t.persist()
+        # every edge tagged with its SOURCE's flag: dynamic = in-degree
+        # > 0 (rank can change), static = in-degree 0 (rank pinned at
+        # its teleport value tp, so it contributes tp * share, folded
+        # once into the per-target baseline s0). Sources outside the
+        # node universe match no flag and contribute nothing, as in
+        # the unsplit superstep join.
+        flagged = edges_pre.join(
+            node_t.select(
+                F.col("id").alias("src"), (F.col("indeg") > 0).alias("_dyn"), "tp"
+            ),
+            "src",
+            "left",
+        )
+        edges_dyn = pin_table(
+            flagged.filter(F.col("_dyn")).select("src", "dst", "share")
+            .repartition("src").sortWithinPartitions("src")
+        )
+        # s0 and the iterated in-degrees in one pass over the same join
+        per_dst = flagged.groupBy("dst").agg(
+            F.sum(F.when(~F.col("_dyn"), F.col("tp") * F.col("share"))).alias("s0"),
+            F.count("*").alias("all_in"),
+            F.count(F.when(F.col("_dyn"), 1)).alias("dyn_in"),
+        ).observe(
+            seen_dst,
+            F.sum("all_in").alias("e"), F.sum("dyn_in").alias("de"),
+            F.max("dyn_in").alias("mx"),
+        )
+        dyn = (
+            node_t.observe(seen_nodes, F.count(F.lit(1)).alias("n"))
+            .filter(F.col("indeg") > 0)
+            .join(per_dst, F.col("id") == F.col("dst"), "left")
+            .select("id", F.coalesce(F.col("s0"), F.lit(0.0)).alias("s0"), "tp")
+        )
+    else:
+        dyn = node_t.observe(seen_nodes, F.count(F.lit(1)).alias("n")).select(
+            "id", F.lit(0.0).alias("s0"), "tp"
+        )
+    dyn = pin_table(dyn.repartition("id"))
+    n_nodes = seen_nodes.get["n"]
+    targets = seen_dst.get
+    if split_static:
+        n_edges, n_dyn_edges = targets["e"], targets["de"]
+        # load-only: the share table (cached, or an undecided run's
+        # unsplit pin); the node table stays cached for the static rows
+        # of the lazy scores (freed by PageRankResult.release)
+        release_state(edges_pre)
+    else:
+        n_dyn_edges = n_edges
     if hot_key_salt == "auto":
-        # skew probe: max in-degree vs MEAN OVER ALL NODES (edges/nodes
-        # — per-target averages hide a hub when few targets exist)
-        mx = (
-            edges_dyn.groupBy("dst").agg(F.count("*").alias("c"))
-            .agg(F.max("c").alias("mx"))
-            .first()["mx"]
-        ) or 0
+        # skew probe: max in-degree of the iterated edges vs MEAN OVER
+        # ALL NODES (edges/nodes — per-target averages hide a hub when
+        # few targets exist)
         mean_indeg = n_dyn_edges / max(n_nodes, 1)
-        hot_key_salt = 16 if mx > 32 * max(mean_indeg, 1.0) else 0
+        hot_key_salt = 16 if (targets["mx"] or 0) > 32 * max(mean_indeg, 1.0) else 0
     t_load = time.time() - t0
 
     loop = SuperstepLoop(
@@ -344,10 +405,10 @@ def pagerank(
         ranks = new_ranks
 
     scores = ranks
-    if static_nodes is not None:
+    if split_static:
         # a static node's rank is pinned at its teleport value forever
         scores = ranks.union(
-            _with_tp(static_nodes.select("id")).select("id", F.col("tp").alias("rank"))
+            node_t.filter(F.col("indeg") == 0).select("id", F.col("tp").alias("rank"))
         )
     if checkpoint_dir:
         # final durable state so a subsequent resume() sees completion
@@ -386,10 +447,12 @@ def pagerank(
         "personalized": srcs is not None,
         "static_folding": split_static,
     }
-    base.unpersist()
-    if targets is not None:
-        targets.unpersist()
-        dyn_base.unpersist()
     release_state(dyn)
     release_state(edges_dyn)
-    return PageRankResult(scores=scores, iterations=it, converged=converged, delta=delta, stats=stats)
+    # what the lazy scores still read: the final state (the durable
+    # final write, else the last superstep's) and, with the split, the
+    # node table behind the static rows
+    caches = [scores if checkpoint_dir else ranks] + ([node_t] if split_static else [])
+    return PageRankResult(scores=scores, iterations=it, converged=converged, delta=delta,
+                          stats=stats, _caches=caches)
+

@@ -38,6 +38,18 @@ def test_write_results_round_trip(spark, tmp_path):
     assert {r["score"] for r in back.collect()} == {float(i * 2) for i in range(100)}
 
 
+def test_write_results_rows_are_rows_written(spark, tmp_path):
+    """``rows`` counts what THIS call wrote: appending the same frame
+    twice reports len(frame) both times, while the path holds both."""
+    df = spark.range(37).select("id", (F.col("id") + 0.5).alias("score"))
+    path = str(tmp_path / "appended")
+    first = write_results(df, path, mode="append")
+    second = write_results(df, path, mode="append")
+    assert first["rows"] == 37
+    assert second["rows"] == 37
+    assert spark.read.parquet(path).count() == 74
+
+
 def test_read_table_parquet_and_iceberg_boundary(spark):
     """read_table reads Iceberg-layout parquet paths natively; the
     iceberg: catalog form is gated behind a runtime probe with a clear

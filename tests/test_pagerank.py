@@ -1,6 +1,9 @@
 """PageRank parity with the reference PageRankTest fixture (FIXTURES.md §1)."""
 
+import sys
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from linkgraph import edges_from_pairs, pagerank
@@ -206,3 +209,112 @@ def test_pagerank_report_delta_matches_two_runs(spark):
     assert res7.stats["l1_delta"] <= 0.85 * res5.stats["l1_delta"] + 1e-12
     # fixed-iteration default leaves the fields None
     assert pagerank(edges, nodes=nodes, max_iter=2).stats["l1_delta"] is None
+
+
+def _reference_graph(seed=5, n=60, m=200, isolated=4, hub_leaves=80):
+    """Random weighted digraph plus a hub fed by ``hub_leaves`` leaves,
+    over ids 0..n+hub_leaves; ``isolated`` further ids touch no edge."""
+    rng = np.random.default_rng(seed)
+    pairs = {(int(a), int(b)) for a, b in rng.integers(0, n, size=(m, 2)) if a != b}
+    hub = n
+    pairs |= {(n + 1 + i, hub) for i in range(hub_leaves)} | {(hub, 0)}
+    edges = sorted((a, b, float(rng.integers(1, 5))) for a, b in pairs)
+    return edges, n + 1 + hub_leaves + isolated
+
+
+def _numpy_pagerank(edges, universe, weighted, static_folding, iters, d=0.85):
+    """Scores by the reference formula, the load counts PageRank
+    reports, and the hot_key_salt="auto" decision, all in numpy."""
+    idx = {v: i for i, v in enumerate(universe)}
+    src = np.array([idx[a] for a, _, _ in edges])
+    dst = np.array([idx[b] for _, b, _ in edges])
+    w = np.array([c for _, _, c in edges]) if weighted else np.ones(len(edges))
+    share = w / np.bincount(src, weights=w, minlength=len(universe))[src]
+    p = np.full(len(universe), 1 - d)
+    for _ in range(iters):
+        p = (1 - d) + d * np.bincount(dst, weights=p[src] * share, minlength=len(universe))
+    indeg = np.bincount(dst, minlength=len(universe))
+    iterated = indeg[src] > 0 if static_folding else np.ones(len(edges), bool)
+    max_in = np.bincount(dst[iterated], minlength=len(universe)).max()
+    salt = 16 if max_in > 32 * max(iterated.sum() / len(universe), 1.0) else 0
+    counts = {"nodes": len(universe), "edges": len(edges), "dynamic_edges": int(iterated.sum())}
+    return dict(zip(universe, p)), counts, salt
+
+
+@pytest.mark.parametrize("hot_key_salt", [0, "auto"])
+@pytest.mark.parametrize("explicit_nodes", [True, False])
+@pytest.mark.parametrize("weighted", [False, True])
+@pytest.mark.parametrize("static_folding", [True, False])
+def test_pagerank_load_matches_numpy(spark, static_folding, weighted, explicit_nodes, hot_key_salt):
+    """Every load path (static split on/off, weighted shares, a caller
+    node frame with isolated ids or the edge endpoints, skew salt off or
+    auto) gives the reference scores within 1e-9 and the exact node,
+    edge and iterated-edge counts."""
+    edges, n_ids = _reference_graph()
+    edf = spark.createDataFrame(edges, "src long, dst long, weight double")
+    if explicit_nodes:
+        universe = list(range(n_ids))
+        nodes = spark.range(n_ids)
+    else:
+        universe = sorted({a for a, _, _ in edges} | {b for _, b, _ in edges})
+        nodes = None
+    want, counts, salt = _numpy_pagerank(edges, universe, weighted, static_folding, iters=5)
+
+    res = pagerank(edf, nodes=nodes, max_iter=5, weighted=weighted,
+                   static_folding=static_folding, hot_key_salt=hot_key_salt)
+    got = {r["id"]: r["rank"] for r in res.scores.collect()}
+    assert got.keys() == want.keys()
+    for k in want:
+        assert abs(got[k] - want[k]) < 1e-9, (k, got[k], want[k])
+    assert {k: res.stats[k] for k in counts} == counts
+    assert res.stats["hot_key_salt"] == (salt if hot_key_salt == "auto" else 0)
+    assert res.stats["static_folding"] is static_folding
+    res.release()
+
+
+def test_pagerank_release_frees_every_cache(spark):
+    """release() drops every cache the call left behind (the final
+    state and, with the static split, the node table behind the static
+    rows), after the scores were read."""
+    edges, n_ids = _reference_graph(seed=9)
+    edf = spark.createDataFrame(edges, "src long, dst long, weight double").persist()
+    edf.count()
+    sc = spark.sparkContext
+    for kwargs in ({"static_folding": True}, {"static_folding": False},
+                   {"static_folding": True, "nodes": spark.range(n_ids)}):
+        before = len(sc._jsc.getPersistentRDDs())
+        res = pagerank(edf, max_iter=3, hot_key_salt="auto", **kwargs)
+        assert res.scores.count() == res.stats["nodes"]
+        res.release()
+        assert len(sc._jsc.getPersistentRDDs()) == before, kwargs
+    edf.unpersist()
+
+
+def test_pagerank_undecided_split_engages_from_edge_count(spark, monkeypatch):
+    """static_folding=None counts the edges on the unsplit pin and only
+    then splits: above the threshold it reports the split, the same
+    scores and counts as a forced split, and frees the unsplit pin."""
+    pr_module = sys.modules["linkgraph.pagerank"]
+    edges, _ = _reference_graph(seed=13)
+    edf = spark.createDataFrame(edges, "src long, dst long, weight double")
+    forced = pagerank(edf, max_iter=4, static_folding=True, hot_key_salt="auto")
+    want = {r["id"]: r["rank"] for r in forced.scores.collect()}
+    forced.release()
+
+    sc = spark.sparkContext
+    before = len(sc._jsc.getPersistentRDDs())
+    monkeypatch.setattr(pr_module, "STATIC_SPLIT_MIN_EDGES", len(edges))
+    auto = pagerank(edf, max_iter=4, hot_key_salt="auto")
+    assert auto.stats["static_folding"] is True
+    got = {r["id"]: r["rank"] for r in auto.scores.collect()}
+    assert got.keys() == want.keys()
+    assert all(abs(got[k] - want[k]) < 1e-12 for k in want)
+    keys = ("nodes", "edges", "dynamic_edges", "hot_key_salt")
+    assert {k: auto.stats[k] for k in keys} == {k: forced.stats[k] for k in keys}
+    auto.release()
+    assert len(sc._jsc.getPersistentRDDs()) == before
+
+    monkeypatch.setattr(pr_module, "STATIC_SPLIT_MIN_EDGES", len(edges) + 1)
+    unsplit = pagerank(edf, max_iter=1)
+    assert unsplit.stats["static_folding"] is False
+    unsplit.release()

@@ -4,6 +4,7 @@ cached layouts (SURVEY.md §4 — 'verify with explain()')."""
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from linkgraph.graphs import purchase_edges
@@ -141,9 +142,10 @@ def test_advance_truncates_plan_every_superstep(spark):
 
 
 def test_pin_table_preserves_join_layout(spark):
-    """pin_table (localCheckpoint) must keep the pre-shuffled layout:
-    joining a pinned repartition(src) table on src must not re-exchange
-    the pinned side."""
+    """Joining a pinned repartition(src) table on src must not
+    re-exchange the pinned side. Under adaptive execution this holds
+    because the 97-row state side is broadcast, not because the pinned
+    layout survives (see test_pinned_repartition_reports_hash_partitioning)."""
     from linkgraph.checkpoint import pin_table, release_state
 
     e = spark.range(4096).select(
@@ -158,7 +160,7 @@ def test_pin_table_preserves_join_layout(spark):
     plan = _plan(j)
     # pinned = localCheckpoint (tiny plan) + persist (columnar): reads
     # must go through the COLUMNAR cache, and the pinned side must
-    # contribute zero Exchange nodes (its hashpartitioning survives)
+    # contribute zero Exchange nodes
     assert "InMemoryTableScan" in plan, plan[:800]
     big_side_exchanged = re.search(
         r"Exchange hashpartitioning\(src#\d+L, \d+\)[^\n]*\n[^\n]*InMemoryTableScan", plan
@@ -168,6 +170,26 @@ def test_pin_table_preserves_join_layout(spark):
     # original derivation — constant size per superstep
     assert "Scan ExistingRDD" in plan, plan[:800]
     release_state(pinned)
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="with adaptive execution on (the session default) a pinned frame "
+    "reports UnknownPartitioning(0); restoring pinned layouts flips this",
+)
+def test_pinned_repartition_reports_hash_partitioning(spark):
+    """A pinned repartition("src") frame should report hash partitioning
+    on src, so joins on src reuse its layout instead of re-shuffling."""
+    from linkgraph.checkpoint import pin_table, release_state
+
+    e = spark.range(4096).select(
+        (F.col("id") % 97).alias("src"), F.col("id").alias("dst")
+    )
+    pinned = pin_table(e.repartition("src"))
+    layout = pinned._jdf.queryExecution().executedPlan().outputPartitioning().toString()
+    release_state(pinned)
+    assert layout.startswith("hashpartitioning(src#"), layout
+
 
 def test_lsh_signature_is_jvm_side_codegen(spark):
     """lsh_signatures must be one generated JVM expression: no Python
